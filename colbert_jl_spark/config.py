@@ -63,27 +63,6 @@ class EngineConfig:
     # per head-term group — comfortably Arrow-batch sized.
     min_bucket_docs: int = 50_000
     salt_buckets: int = 8
-    # Block storage format; all three are served by the same WAND executor
-    # and rank-identity gated (tests/test_wand.py parametrizes formats):
-    # "varint":   hand-packed delta+varint bytes built in applyInPandas —
-    #             the custom-codec path. DEFAULT, by measurement (r3,
-    #             960k docs pinned to 4 cores, best-of-2 each, recorded in
-    #             BASELINE.md): blocks stage 19.2-19.4 s vs columnar's
-    #             21.4-25.4 s — the numpy sort+pack beats the JVM
-    #             window+collect_list formulation here because the per-
-    #             posting window functions pay row_number/lag over every
-    #             posting while the pandas groups amortize to C loops.
-    # "packed":   PForDelta-style fixed-width bit-packing with exception
-    #             patching (functions/codec.py pack_stream) — the
-    #             capability analogue of the reference's true bit-packing
-    #             (residual.jl:400-441 _packbits/_unpackbits).
-    # "columnar": 100% JVM encode (window + per-block collect_list),
-    #             parquet page encodings do the bit-packing. Keeps the
-    #             whole build Python-free (no Arrow transport of posting
-    #             rows) — the format of choice for clusters whose policy
-    #             forbids Python executors; ~10% slower end-to-end on the
-    #             measured box.
-    block_format: str = "varint"
     # explicit term-hash directory fan-out for the dictionary + block
     # tables; None (default) sizes it to the data in the build driver
     # (~2M postings per partition dir, clamped to [4, 4096])
@@ -108,5 +87,14 @@ class EngineConfig:
         index's own is the silent-corruption class the compactors guard
         against."""
         raw = dict(raw)
+        # Blocks are delta+varint only: it beat columnar on build time
+        # (BASELINE.md r3) and packed on size and decode time (CHANGES.md).
+        # Plans from before that carry the key; refuse any other format.
+        fmt = raw.pop("block_format", "varint")
+        if fmt != "varint":
+            raise ValueError(
+                f"index was built with block_format={fmt!r}, which this "
+                "engine no longer reads; rebuild the index"
+            )
         raw["stopwords"] = tuple(raw.get("stopwords", STOPWORDS))
         return cls(**raw)

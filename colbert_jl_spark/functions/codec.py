@@ -115,133 +115,6 @@ def decode_block(buf: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return docids, tfs, doclens
 
 
-# ---------------------------------------------------------------------------
-# Fixed-width bit-packing with exceptions (PForDelta-style) — the third
-# block format ("packed"). True bit-level packing like the reference's
-# _packbits/_unpackbits (reference src/indexing/codecs/residual.jl:400-441),
-# upgraded with FastPFor-style exception patching: the base width covers
-# the 90th-percentile value; outliers are stored verbatim and patched on
-# decode, so one huge d-gap doesn't inflate the whole block's width.
-# ---------------------------------------------------------------------------
-
-_PFD_MAGIC = b"PFD1"
-
-
-def _bit_lengths(v: np.ndarray) -> np.ndarray:
-    """Exact bit length per uint64 (vectorized; loops over ≤64 shift
-    levels, never over values — float log2 is WRONG above 2^53)."""
-    bl = np.zeros(v.size, dtype=np.uint8)
-    tmp = v.copy()
-    while tmp.any():
-        bl[tmp != 0] += 1
-        tmp = tmp >> np.uint64(1)
-    return bl
-
-
-def pack_stream(values: np.ndarray) -> bytes:
-    """One value stream → <width u8><n_exceptions u32><packed low bits>
-    <exception positions u32[]><exception values u64[]>."""
-    import struct
-
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    n = v.size
-    if n == 0:
-        return struct.pack("<BI", 0, 0)
-    bl = _bit_lengths(v)
-    # width covering (at least) 90% of values: the ceil-90th order statistic
-    width = int(np.sort(bl)[max(0, -(-9 * n // 10) - 1)])
-    exc_idx = np.flatnonzero(bl > width)
-    if width == 0:
-        packed = b""
-    else:
-        bits = (
-            (v[:, None] >> np.arange(width, dtype=np.uint64)[None, :])
-            & np.uint64(1)
-        ).astype(np.uint8)
-        packed = np.packbits(bits.reshape(-1), bitorder="little").tobytes()
-    return (
-        struct.pack("<BI", width, exc_idx.size)
-        + packed
-        + exc_idx.astype(np.uint32).tobytes()
-        + v[exc_idx].tobytes()
-    )
-
-
-def unpack_stream(buf: bytes, off: int, n: int) -> tuple[np.ndarray, int]:
-    """Inverse of pack_stream; returns (values uint64[n], next offset)."""
-    import struct
-
-    width, n_exc = struct.unpack_from("<BI", buf, off)
-    off += 5
-    if n == 0:
-        return np.empty(0, dtype=np.uint64), off
-    if width == 0:
-        vals = np.zeros(n, dtype=np.uint64)
-    else:
-        nbytes = (n * width + 7) // 8
-        bits = np.unpackbits(
-            np.frombuffer(buf, dtype=np.uint8, count=nbytes, offset=off),
-            bitorder="little",
-        )[: n * width].reshape(n, width)
-        vals = np.sum(
-            bits.astype(np.uint64) << np.arange(width, dtype=np.uint64)[None, :],
-            axis=1,
-            dtype=np.uint64,
-        )
-        off += nbytes
-    if n_exc:
-        exc_idx = np.frombuffer(buf, dtype=np.uint32, count=n_exc, offset=off)
-        off += 4 * n_exc
-        exc_val = np.frombuffer(buf, dtype=np.uint64, count=n_exc, offset=off)
-        off += 8 * n_exc
-        vals[exc_idx] = exc_val
-    return vals, off
-
-
-def encode_block_packed(
-    docids: np.ndarray, tfs: np.ndarray, doclens: np.ndarray
-) -> bytes:
-    """Pack one posting block with PForDelta streams: d-gaps, tfs and
-    doclens each bit-packed independently (their value ranges differ by
-    orders of magnitude, so per-stream widths beat the interleaved varint
-    on dense postings). Same logical content as encode_block."""
-    import struct
-
-    d = np.asarray(docids, dtype=np.uint64)
-    if d.size == 0:
-        return b""
-    gaps = np.empty_like(d)
-    gaps[0] = d[0]
-    gaps[1:] = d[1:] - d[:-1]
-    return (
-        _PFD_MAGIC
-        + struct.pack("<I", d.size)
-        + pack_stream(gaps)
-        + pack_stream(np.asarray(tfs, dtype=np.uint64))
-        + pack_stream(np.asarray(doclens, dtype=np.uint64))
-    )
-
-
-def decode_block_packed(buf: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Inverse of encode_block_packed → (docids, tfs, doclens) int64."""
-    import struct
-
-    if not buf:
-        empty = np.empty(0, dtype=np.int64)
-        return empty, empty.copy(), empty.copy()
-    assert buf[:4] == _PFD_MAGIC, "not a packed block"
-    (n,) = struct.unpack_from("<I", buf, 4)
-    off = 8
-    gaps, off = unpack_stream(buf, off, n)
-    tfs, off = unpack_stream(buf, off, n)
-    dls, off = unpack_stream(buf, off, n)
-    return (
-        np.cumsum(gaps.astype(np.int64)),
-        tfs.astype(np.int64),
-        dls.astype(np.int64),
-    )
-
-
 def bm25_idf(df: np.ndarray | float, n_docs: int) -> np.ndarray | float:
     """Lucene-form idf — MUST match operators/bm25.idf_col digit for digit."""
     return np.log(1.0 + (float(n_docs) - df + 0.5) / (df + 0.5))

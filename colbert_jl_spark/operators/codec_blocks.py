@@ -35,8 +35,8 @@ from pyspark.sql import functions as F
 from colbert_jl_spark.config import EngineConfig
 from colbert_jl_spark.functions.codec import (
     block_max_score,
+    decode_block,
     encode_block,
-    encode_block_packed,
 )
 from colbert_jl_spark.functions.tokenizer import terms_col
 
@@ -171,9 +171,7 @@ _ENC_SCHEMA = (
 )
 
 
-def _make_block_encoder(
-    block_size: int, avgdl: float, k1: float, b: float, encode_fn=encode_block
-):
+def _make_block_encoder(block_size: int, avgdl: float, k1: float, b: float):
     def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id")
         tid = int(pdf["tid"].iloc[0])
@@ -197,7 +195,7 @@ def _make_block_encoder(
                     # dictionary join; a 1-ulp assoc difference is absorbed
                     # by WAND's 5e-6 pruning margin)
                     "max_tf_norm": block_max_score(t, l, 1.0, avgdl, k1, b),
-                    "payload": encode_fn(d, t, l),
+                    "payload": encode_block(d, t, l),
                 }
             )
         return pd.DataFrame(rows)
@@ -216,7 +214,7 @@ def posting_blocks(
     count_obs: tuple | None = None,
 ) -> DataFrame:
     """postings (term, doc_id, tf, doclen) + dictionary (term, df) →
-    block table (BLOCK_SCHEMA), varint payload format.
+    block table (BLOCK_SCHEMA), delta+varint payloads.
 
     ``bucket_size`` defaults to ceil(n_docs / num_index_partitions) —
     the plan-derived chunk sizing, analogue of setup()'s num_chunks math
@@ -237,8 +235,7 @@ def posting_blocks(
     if salt is None:
         salt = collision_free_tid_salt(dictionary)
     rows = _narrow_posting_rows(postings_dl, bucket_size, salt)
-    encode_fn = encode_block_packed if cfg.block_format == "packed" else encode_block
-    encoder = _make_block_encoder(cfg.block_size, avgdl, cfg.k1, cfg.b, encode_fn)
+    encoder = _make_block_encoder(cfg.block_size, avgdl, cfg.k1, cfg.b)
     encoded = rows.groupBy("tid", "bucket").applyInPandas(encoder, _ENC_SCHEMA)
     if count_obs is not None:
         # ride-along collision evidence (see plans/build.py blocks stage):
@@ -257,138 +254,18 @@ def posting_blocks(
     return out
 
 
-COLUMNAR_BLOCK_SCHEMA = (
-    "term string, df long, idf double, bucket long, block_id long, "
-    "first_docid long, last_docid long, n_docs long, max_score double, "
-    "doc_gaps array<long>, tfs array<int>, doclens array<int>"
-)
-
-
-def posting_blocks_columnar(
-    postings_dl: DataFrame,
-    dictionary: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    cfg: EngineConfig = EngineConfig(),
-    bucket_size: int | None = None,
-    salt: int | None = None,
-    count_obs: tuple | None = None,
-) -> DataFrame:
-    """Columnar block table — the 100% JVM encode path (optional format;
-    the measured default is "varint", see config.py block_format).
-
-    Same logical layout as the varint format (d-gapped docids + tf +
-    doclen per ≤block_size run, skip pointers, exact block-max score) but
-    stored as parquet ARRAY columns instead of hand-packed bytes:
-    collect_list → sort_array → slice-into-blocks → zip_with d-gaps, all
-    Catalyst expressions. Parquet's own DELTA_BINARY_PACKED/RLE page
-    encodings then do the bit-packing the reference does by hand
-    (reference src/indexing/codecs/residual.jl:518-604) — measured, the
-    applyInPandas variant moves EVERY posting row through Arrow→pandas
-    and that transport alone dominates the stage (~2/3 of wall time) and
-    caps scaling; this path shuffles once and never leaves the JVM.
-
-    The varint codec (functions/codec.py + posting_blocks) remains the
-    custom-codec capability demo and the wire format for non-parquet
-    sinks; both formats are served by the same WAND executor.
-
-    Round 2: the per-posting shuffle is DICTIONARY-ENCODED — rows carry
-    (tid=xxhash64(term, salt), bucket, doc_id, tf:int, doclen:int), no
-    strings, no df/idf (the idf factor moves outside the max; see tf_norm
-    below). Measured ~30% fewer shuffle bytes on the 960k-doc scaling
-    corpus; collision safety is an explicit vocab-scale check
-    (collision_free_tid_salt)."""
-    if bucket_size is None:
-        bucket_size = max(
-            cfg.min_bucket_docs, -(-n_docs // cfg.num_index_partitions)
-        )
-    from pyspark.sql import Window
-
-    k1, b = cfg.k1, cfg.b
-    bs = cfg.block_size
-    if salt is None:
-        salt = collision_free_tid_salt(dictionary)
-    narrow = _narrow_posting_rows(postings_dl, bucket_size, salt)
-    # Window formulation keeps every per-posting computation UNBOXED inside
-    # whole-stage codegen (row_number/lag/scalar BM25 partial); only the
-    # final <=block_size collect_list touches array objects. A
-    # collect-the-whole-run-then-slice formulation boxes every posting into
-    # array-of-struct elements and is ~2x slower at scale (measured).
-    w = Window.partitionBy("tid", "bucket").orderBy("doc_id")
-    tfd, dld = F.col("tf").cast("double"), F.col("doclen").cast("double")
-    # idf-free per-posting partial: idf is a per-TERM constant, so
-    # max(idf * x) == idf * max(x) — the dictionary joins back on the
-    # block-level rows (~1/block_size the posting count), never per posting
-    tf_norm = (tfd * F.lit(k1 + 1.0)) / (
-        tfd + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dld / F.lit(float(avgdl)))
-    )
-    rows = (
-        narrow.withColumn("rn", F.row_number().over(w) - 1)
-        # gap vs the previous posting in the SAME bucket run; the decoder
-        # re-anchors each block at its first_docid skip pointer, so the
-        # block's first gap value never matters
-        .withColumn("gap", F.col("doc_id") - F.coalesce(F.lag("doc_id").over(w), F.lit(0)))
-        .withColumn("tf_norm", tf_norm)
-        .withColumn("block_id", F.floor(F.col("rn") / bs))
-    )
-    agged = rows.groupBy("tid", "bucket", "block_id").agg(
-        F.min("doc_id").alias("first_docid"),
-        F.max("doc_id").alias("last_docid"),
-        F.count("*").alias("n_docs"),
-        F.max("tf_norm").alias("max_tf_norm"),
-        F.sort_array(
-            F.collect_list(F.struct("doc_id", "gap", "tf", "doclen"))
-        ).alias("chunk"),
-    )
-    if count_obs is not None:
-        # ride-along collision evidence — see posting_blocks
-        agged = agged.observe(count_obs[0], F.count(F.lit(1)).alias("n"))
-    out = agged.join(_dict_tid(dictionary, n_docs, salt), "tid").select(
-        "term", "df", "idf", "bucket", "block_id",
-        "first_docid", "last_docid", "n_docs",
-        (F.col("idf") * F.col("max_tf_norm")).alias("max_score"),
-        F.transform("chunk", lambda x: x["gap"]).alias("doc_gaps"),
-        F.transform("chunk", lambda x: x["tf"].cast("int")).alias("tfs"),
-        F.transform("chunk", lambda x: x["doclen"].cast("int")).alias("doclens"),
-    )
-    if count_obs is not None:
-        out = out.observe(count_obs[1], F.count(F.lit(1)).alias("n"))
-    return out
-
-
-def blocks_to_postings(
-    blocks: DataFrame, cfg: EngineConfig = EngineConfig()
-) -> DataFrame:
-    """Inverse of the block encoders: block rows → the posting stream
+def blocks_to_postings(blocks: DataFrame) -> DataFrame:
+    """Inverse of posting_blocks: block rows → the posting stream
     (term, doc_id, tf, doclen). Used by minor compaction
     (streaming/ingest.minor_compact) to re-encode range-overlapping
     segments — decode runs distributed in mapInPandas over exactly the
-    rows the caller pruned to, never the whole table. Handles both the
-    payload formats (varint/packed bytes) and the columnar array layout."""
-    import numpy as np
-
-    from colbert_jl_spark.functions.codec import (
-        decode_block,
-        decode_block_packed,
-    )
-
-    decoder = decode_block_packed if cfg.block_format == "packed" else decode_block
-    is_columnar = "doc_gaps" in blocks.columns
-    cols = ["term", "first_docid"] + (
-        ["doc_gaps", "tfs", "doclens"] if is_columnar else ["payload"]
-    )
+    rows the caller pruned to, never the whole table."""
 
     def explode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             parts = []
             for r in pdf.itertuples():
-                if is_columnar:
-                    d = np.asarray(r.doc_gaps, dtype=np.int64).cumsum()
-                    d += int(r.first_docid) - d[0]
-                    t = np.asarray(r.tfs, dtype=np.int64)
-                    l = np.asarray(r.doclens, dtype=np.int64)
-                else:
-                    d, t, l = decoder(bytes(r.payload))
+                d, t, l = decode_block(bytes(r.payload))
                 parts.append(
                     pd.DataFrame(
                         {
@@ -402,7 +279,7 @@ def blocks_to_postings(
             if parts:
                 yield pd.concat(parts, ignore_index=True)
 
-    return blocks.select(*cols).mapInPandas(
+    return blocks.select("term", "payload").mapInPandas(
         explode_batches, "term string, doc_id long, tf long, doclen int"
     )
 

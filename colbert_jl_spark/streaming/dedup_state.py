@@ -330,7 +330,10 @@ class DedupIndex:
             if prior_labels is not None
             else None
         )
-        wave_ids = wave_docs.select(F.col("doc_id").alias("node"))
+        # distinct on every wave, the first included: a doc_id repeated
+        # inside the wave then shrinks the rewritten label rows below the
+        # wave's row count, and the re-ingestion guard below refuses it
+        wave_ids = wave_docs.select(F.col("doc_id").alias("node")).distinct()
         if prior_kv is None:
             sub_nodes = wave_ids
             sub_edges = new_pairs
@@ -416,7 +419,8 @@ class DedupIndex:
         if prior_kv is not None and not legacy_layout:
             # unaffected partitions enter the new version as hardlinks to
             # the previous version's files — zero bytes copied, and the
-            # inode identity is the test gate for "not rewritten"
+            # inode identity is the test gate for "not rewritten"; on a
+            # filesystem without hardlinks they are copied instead
             prior_dir = os.path.join(self.path, st["labels_dir"])
             aff = set(affected_parts)
             for entry in os.listdir(prior_dir):
@@ -429,10 +433,12 @@ class DedupIndex:
                 os.makedirs(dst_part, exist_ok=True)
                 for fname in os.listdir(src):
                     if fname.startswith("part-"):
-                        os.link(
-                            os.path.join(src, fname),
-                            os.path.join(dst_part, fname),
-                        )
+                        src_f = os.path.join(src, fname)
+                        dst_f = os.path.join(dst_part, fname)
+                        try:
+                            os.link(src_f, dst_f)
+                        except OSError:
+                            shutil.copy2(src_f, dst_f)
 
         # ---- re-ingestion guard (ADVICE r6): a wave whose doc_id already
         # exists in the prior labels would be silently relabeled (the doc
@@ -458,9 +464,9 @@ class DedupIndex:
                 f"wave {wave} rewrote {rewritten} label rows where "
                 f"{expected} were expected ({prior_aff} prior rows in the "
                 f"affected partitions + {n_wave} wave docs): the wave "
-                "re-ingests doc_id(s) already in the state — doc_ids must "
-                "be unique across waves; the update was aborted before "
-                "commit"
+                "re-ingests doc_id(s) already in the state or repeats one "
+                "— doc_ids must be unique within and across waves; the "
+                "update was aborted before commit"
             )
         prior_total = st.get("n_labels")
         if prior_total is None and st["labels_dir"]:

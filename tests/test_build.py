@@ -22,13 +22,11 @@ def index_dir(tmp_path):
     return str(tmp_path / "idx")
 
 
-@pytest.mark.parametrize("fmt", ["varint", "packed", "columnar"])
-def test_build_search_matches_oracle(spark, docs01, index_dir, fmt):
+def test_build_search_matches_oracle(spark, docs01, index_dir):
     # min_bucket_docs=64 → multiple doc-range buckets even at 500 docs, so
-    # the persisted path exercises the multi-bucket merge; parametrized over
-    # block formats because the PERSISTED path re-derives the payload
-    # decoder from plan.json's config round-trip (not from the in-memory cfg)
-    cfg = EngineConfig(block_size=32, min_bucket_docs=64, block_format=fmt)
+    # the persisted path exercises the multi-bucket merge; the reader
+    # re-derives its config from plan.json's round-trip, not from cfg
+    cfg = EngineConfig(block_size=32, min_bucket_docs=64)
     builder = IndexBuilder(index_dir, cfg)
     plan = builder.build(docs01)
     assert plan["n_docs"] == docs01.count()
@@ -43,6 +41,42 @@ def test_build_search_matches_oracle(spark, docs01, index_dir, fmt):
     import pandas as pd
 
     pd.testing.assert_frame_equal(got, want, check_like=True)
+
+
+def test_legacy_block_format_plans(spark, docs001, index_dir):
+    """plan.json files from before the single block format carry
+    ``config.block_format``: "varint" still opens and serves the same
+    top-k; any other format is refused on open, never decoded wrongly."""
+    from colbert_jl_spark.streaming.ingest import compact_streamed_index
+
+    IndexBuilder(index_dir, EngineConfig(block_size=32)).build(docs001)
+    q = queries_df(spark)
+    key = ["qid", "rank"]
+    before = IndexReader(spark, index_dir).search(q).toPandas().sort_values(key)
+    plan_path = os.path.join(index_dir, "plan.json")
+
+    def set_format(fmt):
+        with open(plan_path) as f:
+            plan = json.load(f)
+        plan["config"]["block_format"] = fmt
+        with open(plan_path, "w") as f:
+            json.dump(plan, f)
+
+    set_format("varint")
+    after = IndexReader(spark, index_dir).search(q).toPandas().sort_values(key)
+    import pandas as pd
+
+    pd.testing.assert_frame_equal(
+        before.reset_index(drop=True), after.reset_index(drop=True)
+    )
+
+    set_format("packed")
+    with pytest.raises(ValueError, match="'packed'.*rebuild the index"):
+        IndexReader(spark, index_dir)
+    with pytest.raises(ValueError, match="'packed'"):
+        IndexReader(spark, index_dir, cfg=EngineConfig())
+    with pytest.raises(ValueError, match="'packed'"):
+        compact_streamed_index(spark, index_dir)
 
 
 def test_persisted_intersect_search(spark, docs01, index_dir):

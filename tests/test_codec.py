@@ -13,11 +13,7 @@ from colbert_jl_spark.functions.codec import (
     block_max_score,
     bm25_partial,
     decode_block,
-    decode_block_packed,
     encode_block,
-    encode_block_packed,
-    pack_stream,
-    unpack_stream,
     varint_decode,
     varint_encode,
 )
@@ -68,60 +64,6 @@ def test_block_roundtrip(run):
     assert d2.tolist() == docids.tolist()
     assert t2.tolist() == tfs.tolist()
     assert l2.tolist() == dls.tolist()
-
-
-@given(
-    st.lists(
-        st.integers(min_value=0, max_value=2**63 - 1), min_size=0, max_size=400
-    )
-)
-@settings(max_examples=200, deadline=None)
-def test_pack_stream_roundtrip(values):
-    arr = np.array(values, dtype=np.uint64)
-    buf = pack_stream(arr)
-    out, off = unpack_stream(buf, 0, arr.size)
-    assert out.tolist() == values
-    assert off == len(buf)
-
-
-def test_pack_stream_exception_patching():
-    # 90% small values + huge outliers: width must track the small ones
-    vals = np.array([3] * 90 + [2**40] * 10, dtype=np.uint64)
-    buf = pack_stream(vals)
-    # base width 2 bits → ~25 bytes packed + 10 exceptions; interleaved
-    # varint would spend 6 bytes on EVERY outlier and 1 on every value
-    assert len(buf) < 160
-    out, _ = unpack_stream(buf, 0, vals.size)
-    assert out.tolist() == vals.tolist()
-
-
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=2**40),
-            st.integers(min_value=1, max_value=255),
-            st.integers(min_value=0, max_value=300),
-        ),
-        min_size=0,
-        max_size=300,
-    )
-)
-@settings(max_examples=200, deadline=None)
-def test_packed_block_roundtrip(run):
-    gaps = np.array([g for g, _, _ in run], dtype=np.int64)
-    docids = np.cumsum(gaps)
-    tfs = np.array([t for _, t, _ in run], dtype=np.int64)
-    dls = np.array([d for _, _, d in run], dtype=np.int64)
-    d2, t2, l2 = decode_block_packed(encode_block_packed(docids, tfs, dls))
-    assert d2.tolist() == docids.tolist()
-    assert t2.tolist() == tfs.tolist()
-    assert l2.tolist() == dls.tolist()
-
-
-def test_empty_packed_block():
-    d, t, l = decode_block_packed(b"")
-    assert len(d) == len(t) == len(l) == 0
-    assert encode_block_packed(np.array([]), np.array([]), np.array([])) == b""
 
 
 def test_empty_block():

@@ -261,3 +261,40 @@ def test_labels_rewrite_is_partition_local(spark, tmp_path):
         and part_inodes(cur, entry) == part_inodes(prev, entry)
     ]
     assert shared, "no unaffected partition was hardlinked"
+
+
+def test_labels_copy_when_hardlinks_fail(spark, tmp_path, monkeypatch):
+    """On a filesystem without hardlinks, the unaffected label partitions
+    are copied into the new version instead: the incremental labels still
+    equal the from-scratch run."""
+    import errno
+
+    from colbert_jl_spark.streaming import dedup_state as ds
+
+    calls = []
+
+    def no_link(src, dst):
+        calls.append(dst)
+        raise OSError(errno.EPERM, "hardlinks not supported", dst)
+
+    monkeypatch.setattr(ds.os, "link", no_link)
+    idx, _ = _run_waves(spark, str(tmp_path / "dedup"))
+    assert calls, "no unaffected partition went through the link path"
+    got = {r.doc_id: r.component_id for r in idx.labels(spark).collect()}
+    # the from-scratch labels (test_incremental_waves_equal_from_scratch)
+    assert got == {0: 0, 1: 0, 3: 0, 5: 0, 6: 0, 2: 2, 4: 4}
+
+
+def test_first_wave_duplicate_doc_id_refused(spark, tmp_path):
+    """A doc_id repeated inside the FIRST wave is refused by the same
+    row-count guard as a re-ingested one, and no label rows are written."""
+    from colbert_jl_spark.streaming.dedup_state import DedupIndex
+
+    path = str(tmp_path / "dedup")
+    idx = DedupIndex(path, n=3, threshold=0.7, cfg=CFG)
+    wave = spark.createDataFrame(_ROWS[0:3] + [_ROWS[1]], SCHEMA)
+    with pytest.raises(ValueError, match="re-ingests"):
+        idx.update(spark, wave)
+    assert idx._state() is None
+    assert not [e for e in os.listdir(path) if e.startswith("labels.v")]
+    assert idx.labels(spark).count() == 0

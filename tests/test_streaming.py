@@ -439,6 +439,16 @@ def test_minor_compaction_restores_segment_disjointness(spark, docs01, tmp_path)
     # and further incremental epochs still work after a minor pass
     assert compact_streamed_index(spark, idx, cfg)["compaction"]["mode"] == "noop"
 
+    # a plan from a removed block format is refused, not decoded
+    plan = _json.load(open(os.path.join(idx, "plan.json")))
+    plan["config"]["block_format"] = "columnar"
+    with open(os.path.join(idx, "plan.json"), "w") as f:
+        _json.dump(plan, f)
+    with pytest.raises(ValueError, match="'columnar'"):
+        minor_compact(spark, idx)
+    with pytest.raises(ValueError, match="'columnar'"):
+        compact_streamed_index(spark, idx, cfg)
+
 
 def test_crashed_incremental_compaction_recovers_via_full_rebuild(
     spark, docs01, tmp_path
@@ -982,10 +992,15 @@ def test_positions_trash_reclamation_is_age_gated(spark, docs001, tmp_path):
     """ADVICE r6: two invalidations in quick succession must NOT reclaim
     the first invalidation's trash (a reader may still be mid-scan on
     it) — only trash older than POSITIONS_TRASH_GRACE_SEC goes; younger
-    dirs survive and the numbering continues past them."""
+    dirs survive and the numbering continues past them. The same gate
+    holds at the other two reclamation sites: version GC and the major
+    compaction's cleanup."""
     from colbert_jl_spark.plans.build import IndexBuilder
     from colbert_jl_spark.streaming import ingest
-    from colbert_jl_spark.streaming.ingest import _invalidate_positions
+    from colbert_jl_spark.streaming.ingest import (
+        _gc_positions_dirs,
+        _invalidate_positions,
+    )
 
     cfg = EngineConfig(block_size=32)
     idx = str(tmp_path / "idx")
@@ -1013,3 +1028,27 @@ def test_positions_trash_reclamation_is_age_gated(spark, docs001, tmp_path):
     _invalidate_positions(idx)
     assert os.path.isdir(t0)  # numbering restarted: the NEW trash
     assert not os.path.exists(t1)
+
+    stream_idx = str(tmp_path / "stream_idx")
+    pages_dir = str(tmp_path / "pages_in")
+    pages_from_documents(docs001).write.parquet(pages_dir)
+    stream_pages_to_postings(
+        spark, pages_dir, stream_idx, str(tmp_path / "ckpt"), cfg
+    )
+    sites = {
+        "version GC": (idx, lambda: _gc_positions_dirs(idx, keep=set())),
+        # the first compaction of a streamed index is a major one
+        "major compaction": (
+            stream_idx, lambda: compact_streamed_index(spark, stream_idx, cfg)
+        ),
+    }
+    for site, (root, reclaim) in sites.items():
+        young = os.path.join(root, "positions.trash.7")
+        old = os.path.join(root, "positions.trash.8")
+        for t in (young, old):
+            os.makedirs(t)
+        past = os.path.getmtime(old) - ingest.POSITIONS_TRASH_GRACE_SEC - 60
+        os.utime(old, (past, past))
+        reclaim()
+        assert os.path.isdir(young), f"{site} reclaimed young trash"
+        assert not os.path.exists(old), f"{site} kept expired trash"

@@ -5,7 +5,6 @@ end-to-end top-k outputs (reference README.md:153-156 golden result)."""
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 
 from colbert_jl_spark.config import EngineConfig
 from colbert_jl_spark.operators.bm25 import bm25_topk
@@ -29,14 +28,10 @@ def test_wand_rank_identical_sf001(spark, docs01):
     _assert_rank_identical(oracle, wand)
 
 
-@pytest.mark.parametrize("fmt", ["columnar", "varint", "packed"])
-def test_wand_rank_identical_small_blocks(spark, docs01, fmt):
+def test_wand_rank_identical_small_blocks(spark, docs01):
     """Tiny blocks force many skip/pivot decisions (stress the BMW logic);
-    small salt count stresses the bucket merge; both block formats must be
-    served identically by the executor."""
-    cfg = EngineConfig(
-        block_size=8, num_index_partitions=7, min_bucket_docs=1, block_format=fmt
-    )
+    small salt count stresses the bucket merge."""
+    cfg = EngineConfig(block_size=8, num_index_partitions=7, min_bucket_docs=1)
     q = queries_df(spark)
     oracle = bm25_topk(docs01, q, cfg).toPandas()
     wand = wand_topk_inline(spark, docs01, q, cfg).toPandas()
@@ -67,16 +62,13 @@ def test_wand_duplicate_query_terms(spark, docs01):
     assert ((s2[shared] - 2 * s1[shared]).abs() < 2e-6).all()
 
 
-@pytest.mark.parametrize("fmt", ["varint", "packed", "columnar"])
-def test_intersect_rank_identical(spark, docs01, fmt):
+def test_intersect_rank_identical(spark, docs01):
     """Skip-pointer zig-zag intersection == exhaustive conjunctive scorer,
-    across all block formats and with tiny blocks (many skip decisions)."""
+    with tiny blocks (many skip decisions)."""
     from colbert_jl_spark.operators.bm25 import bm25_topk_conjunctive
     from colbert_jl_spark.operators.wand import wand_intersect_inline
 
-    cfg = EngineConfig(
-        block_size=8, num_index_partitions=7, min_bucket_docs=1, block_format=fmt
-    )
+    cfg = EngineConfig(block_size=8, num_index_partitions=7, min_bucket_docs=1)
     q = queries_df(spark)
     oracle = bm25_topk_conjunctive(docs01, q, cfg).toPandas()
     zig = wand_intersect_inline(spark, docs01, q, cfg).toPandas()
