@@ -22,7 +22,17 @@ def index_dir(tmp_path):
     return str(tmp_path / "idx")
 
 
-def test_build_search_matches_oracle(spark, docs01, index_dir):
+@pytest.mark.parametrize("fmt", ["varint", "packed", "columnar"])
+def test_build_search_matches_oracle(spark, docs01, index_dir, fmt):
+    """Build, then search the persisted index against the oracle. Then the
+    same index under a plan.json from before the single block format,
+    which records ``config.block_format=fmt``: "varint" still opens and
+    serves the oracle's top-k; any other format is refused on open (also
+    with ``cfg=`` and by the compactor), never decoded wrongly."""
+    import pandas as pd
+
+    from colbert_jl_spark.streaming.ingest import compact_streamed_index
+
     # min_bucket_docs=64 → multiple doc-range buckets even at 500 docs, so
     # the persisted path exercises the multi-bucket merge; the reader
     # re-derives its config from plan.json's round-trip, not from cfg
@@ -31,51 +41,33 @@ def test_build_search_matches_oracle(spark, docs01, index_dir):
     plan = builder.build(docs01)
     assert plan["n_docs"] == docs01.count()
 
-    reader = IndexReader(spark, index_dir)
-    report = reader.validate()
-    assert report["ok"], report
-
-    q = queries_df(spark)
-    got = reader.search(q).toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
-    want = bm25_topk(docs01, q, cfg).toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(got, want, check_like=True)
-
-
-def test_legacy_block_format_plans(spark, docs001, index_dir):
-    """plan.json files from before the single block format carry
-    ``config.block_format``: "varint" still opens and serves the same
-    top-k; any other format is refused on open, never decoded wrongly."""
-    from colbert_jl_spark.streaming.ingest import compact_streamed_index
-
-    IndexBuilder(index_dir, EngineConfig(block_size=32)).build(docs001)
     q = queries_df(spark)
     key = ["qid", "rank"]
-    before = IndexReader(spark, index_dir).search(q).toPandas().sort_values(key)
+    want = bm25_topk(docs01, q, cfg).toPandas().sort_values(key).reset_index(drop=True)
+
+    def search():
+        reader = IndexReader(spark, index_dir)
+        report = reader.validate()
+        assert report["ok"], report
+        return reader.search(q).toPandas().sort_values(key).reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(search(), want, check_like=True)
+
     plan_path = os.path.join(index_dir, "plan.json")
+    with open(plan_path) as f:
+        plan = json.load(f)
+    plan["config"]["block_format"] = fmt
+    with open(plan_path, "w") as f:
+        json.dump(plan, f)
 
-    def set_format(fmt):
-        with open(plan_path) as f:
-            plan = json.load(f)
-        plan["config"]["block_format"] = fmt
-        with open(plan_path, "w") as f:
-            json.dump(plan, f)
-
-    set_format("varint")
-    after = IndexReader(spark, index_dir).search(q).toPandas().sort_values(key)
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(
-        before.reset_index(drop=True), after.reset_index(drop=True)
-    )
-
-    set_format("packed")
-    with pytest.raises(ValueError, match="'packed'.*rebuild the index"):
+    if fmt == "varint":
+        pd.testing.assert_frame_equal(search(), want, check_like=True)
+        return
+    with pytest.raises(ValueError, match=f"'{fmt}'.*rebuild the index"):
         IndexReader(spark, index_dir)
-    with pytest.raises(ValueError, match="'packed'"):
+    with pytest.raises(ValueError, match=f"'{fmt}'"):
         IndexReader(spark, index_dir, cfg=EngineConfig())
-    with pytest.raises(ValueError, match="'packed'"):
+    with pytest.raises(ValueError, match=f"'{fmt}'"):
         compact_streamed_index(spark, index_dir)
 
 

@@ -5,6 +5,7 @@ end-to-end top-k outputs (reference README.md:153-156 golden result)."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from colbert_jl_spark.config import EngineConfig
 from colbert_jl_spark.operators.bm25 import bm25_topk
@@ -20,6 +21,18 @@ def _assert_rank_identical(oracle_pdf: pd.DataFrame, wand_pdf: pd.DataFrame):
     pd.testing.assert_frame_equal(o, w, check_like=True)
 
 
+def _plan_cfg(fmt: str, **fields) -> EngineConfig | None:
+    """The config of an index whose plan.json (from before the single block
+    format) records ``block_format=fmt``. Only "varint" is still served;
+    any other format must be refused before a block is decoded."""
+    raw = {**fields, "block_format": fmt}
+    if fmt == "varint":
+        return EngineConfig.from_plan_config(raw)
+    with pytest.raises(ValueError, match=f"'{fmt}'.*rebuild the index"):
+        EngineConfig.from_plan_config(raw)
+    return None
+
+
 def test_wand_rank_identical_sf001(spark, docs01):
     cfg = EngineConfig()
     q = queries_df(spark)
@@ -28,10 +41,14 @@ def test_wand_rank_identical_sf001(spark, docs01):
     _assert_rank_identical(oracle, wand)
 
 
-def test_wand_rank_identical_small_blocks(spark, docs01):
+@pytest.mark.parametrize("fmt", ["columnar", "varint", "packed"])
+def test_wand_rank_identical_small_blocks(spark, docs01, fmt):
     """Tiny blocks force many skip/pivot decisions (stress the BMW logic);
-    small salt count stresses the bucket merge."""
-    cfg = EngineConfig(block_size=8, num_index_partitions=7, min_bucket_docs=1)
+    small salt count stresses the bucket merge. The config is read back
+    from a legacy plan config recording ``fmt``: only varint is served."""
+    cfg = _plan_cfg(fmt, block_size=8, num_index_partitions=7, min_bucket_docs=1)
+    if cfg is None:
+        return
     q = queries_df(spark)
     oracle = bm25_topk(docs01, q, cfg).toPandas()
     wand = wand_topk_inline(spark, docs01, q, cfg).toPandas()
@@ -62,13 +79,17 @@ def test_wand_duplicate_query_terms(spark, docs01):
     assert ((s2[shared] - 2 * s1[shared]).abs() < 2e-6).all()
 
 
-def test_intersect_rank_identical(spark, docs01):
+@pytest.mark.parametrize("fmt", ["varint", "packed", "columnar"])
+def test_intersect_rank_identical(spark, docs01, fmt):
     """Skip-pointer zig-zag intersection == exhaustive conjunctive scorer,
-    with tiny blocks (many skip decisions)."""
+    with tiny blocks (many skip decisions). The config is read back from a
+    legacy plan config recording ``fmt``: only varint is served."""
     from colbert_jl_spark.operators.bm25 import bm25_topk_conjunctive
     from colbert_jl_spark.operators.wand import wand_intersect_inline
 
-    cfg = EngineConfig(block_size=8, num_index_partitions=7, min_bucket_docs=1)
+    cfg = _plan_cfg(fmt, block_size=8, num_index_partitions=7, min_bucket_docs=1)
+    if cfg is None:
+        return
     q = queries_df(spark)
     oracle = bm25_topk_conjunctive(docs01, q, cfg).toPandas()
     zig = wand_intersect_inline(spark, docs01, q, cfg).toPandas()
